@@ -427,24 +427,19 @@ def replicate(
     todo = plan(src, dst, target_seq)
     metrics = copy_files(spark, src.root, dst.root, todo, concurrency=concurrency)
 
-    # Shadow-commit the source manifest at the destination (staged).
-    # The summary must carry the source's partition spec / evolved schema
-    # / rename history (HyTable._CARRY_KEYS): partition columns are
-    # stripped from the files by partitionBy and reconstructed at read
+    # Shadow-commit the source snapshot's state at the destination
+    # (staged).  It installs the source's carried table properties —
+    # partition spec, evolved schema, rename history: partition columns
+    # are stripped from the files by partitionBy and reconstructed at read
     # time from the summary, so dropping them would lose those columns at
     # the destination and misread schema-evolved tables.
-    summary = {
-        k: src_snap.summary[k] for k in HyTable._CARRY_KEYS if k in src_snap.summary
-    }
-    summary.update({
-        "replicated_from": src_snap.snapshot_id,
-        "source_seq": src_snap.sequence_number,
-    })
-    staged = dst._make_snapshot(
-        "append", src_snap.manifest, src_snap.schema_ddl, staged=True,
-        summary=summary,
+    staged = dst._transact(
+        "append", src_snap.manifest, lambda head: head.manifest,
+        {**dst._carry_summary(src_snap),
+         "replicated_from": src_snap.snapshot_id,
+         "source_seq": src_snap.sequence_number},
+        schema_ddl=src_snap.schema_ddl, staged=True,
     )
-    dst._commit(staged)
     verify(dst, staged)  # raises on any missing/mismatched file
     published = dst.publish(staged.snapshot_id)
     return published, metrics

@@ -23,12 +23,30 @@ Metadata layout (one directory per table)::
     <root>/data/<commit-uuid>/part-*.parquet
     <root>/_meta/v<seq:06d>.json        ← snapshot file; O_EXCL create = CAS
 
-The commit primitive is ``open(v{N+1}.json, O_CREAT|O_EXCL)``: exactly one
+The CAS register is ``open(v{N+1}.json, O_CREAT|O_EXCL)``: exactly one
 writer can create the next version file, losers re-read and retry — the
 same optimistic protocol Iceberg catalogs implement, using the filesystem
 as the atomic register.  On an object store the same protocol runs against
 a conditional-put (If-None-Match) or a catalog service; only ``_commit``
 changes.
+
+Every write — create, append, overwrite, row-level and MOR deletes,
+compaction, schema/spec changes, publish, branch ops, replication's shadow
+commit — goes through ``HyTable._transact``, one rule:
+
+- commit rule: each attempt reads the log once; the new snapshot's
+  manifest is ``head − removed + added``, its parent is that head (the
+  visible head, or the branch head for a branch write — never a staged
+  snapshot the manifest was not built on), its sequence number comes from
+  the same read, and its summary is the head's carried table properties
+  (``_CARRY_KEYS``) plus the operation's own keys, which appear on that
+  snapshot only.
+- conflict rule: an operation that removes the files it read from its
+  base snapshot raises ``CommitConflict`` if the head has since lost any
+  of them or gained delete files (a rewrite would drop a concurrent
+  rewrite or resurrect deleted rows); publish and fast-forward raise if
+  the head is not an ancestor of the snapshot they promote.  Otherwise a
+  lost CAS race rebases onto the new head and retries.
 
 Scale posture: metadata ops are O(files-in-snapshot) driver-side JSON
 (fine up to millions of files — this is what Iceberg manifests are), and
@@ -139,7 +157,8 @@ def transform_value(tr: dict, val: object) -> object | None:
 
 
 class CommitConflict(Exception):
-    """Another writer committed the same sequence number first."""
+    """Another writer committed the same sequence number first, or a
+    concurrent commit invalidated what this operation read."""
 
 
 class NoSuchSnapshot(Exception):
@@ -469,28 +488,19 @@ class HyTable:
             os.unlink(tmp)
         return snap
 
-    def _next_seq(self) -> int:
-        snaps = self.snapshots()
-        return (snaps[-1].sequence_number + 1) if snaps else 1
-
     def _write_data_files(
-        self,
-        df: DataFrame,
-        partition_by: list[str] | None = None,
-        distribute: bool | None = None,
-        sort_by: list[str] | None = None,
+        self, df: DataFrame, layout: dict | None = None
     ) -> list[DataFileRef]:
+        """Write ``df`` as new files laid out by ``layout`` — the summary of
+        the snapshot the write is against: its partition spec (identity
+        columns and transforms), write distribution and sort order.  Delete
+        files pass no layout."""
+        layout = layout or {}
         commit_dir = uuid.uuid4().hex
         out_dir = os.path.join(self.data_dir, commit_dir)
-        identity, transforms = parse_partition_spec(partition_by)
-        cur = None
-        if distribute is None or sort_by is None:
-            cur = self.current_snapshot() if self.exists() else None
-        if distribute is None:
-            distribute = bool(cur and cur.summary.get("write_distribution") == "hash")
-        if sort_by is None:
-            sort_by = list(cur.summary.get("write_sort_order", [])) if cur else []
-        if distribute and (identity or transforms):
+        identity, transforms = parse_partition_spec(self._spec_of(layout))
+        sort_by = layout.get("write_sort_order") or []
+        if layout.get("write_distribution") == "hash" and (identity or transforms):
             # write.distribution-mode=hash: cluster rows by partition value
             # BEFORE partitionBy, so each table partition is written by one
             # task — N tasks × P partitions would otherwise emit N·P tiny
@@ -553,11 +563,13 @@ class HyTable:
     ) -> Snapshot:
         import dataclasses
 
-        snaps = self.snapshots()
-        if seq is None:
+        if seq is None:  # direct callers; _transact passes seq and parent
+            snaps = self.snapshots()
             seq = (snaps[-1].sequence_number + 1) if snaps else 1
-        if parent is None and snaps:
-            parent = snaps[-1].snapshot_id
+            if parent is None:
+                parent = next(
+                    (s.snapshot_id for s in reversed(snaps) if not s.staged), None
+                )
         # stamp newly-added files (added_seq 0) with this commit's sequence
         manifest = tuple(
             dataclasses.replace(f, added_seq=seq) if f.added_seq == 0 else f
@@ -575,40 +587,114 @@ class HyTable:
             summary=summary or {},
         )
 
-    def _retrying_commit(self, build, max_retries: int = 5) -> Snapshot:
-        """CAS retry loop with jittered backoff
-        (doc iceberg-arch-geo-distributed-ha.md:287-311)."""
+    _COMMIT_ATTEMPTS = 5
+
+    def _transact(
+        self,
+        operation: str,
+        added=(),
+        removed=(),
+        summary=None,
+        *,
+        base: Snapshot | None = None,
+        schema_ddl: str | None = None,
+        staged: bool = False,
+        branch: str | None = None,
+        descendant: Snapshot | None = None,
+    ) -> Snapshot:
+        """The one commit path (module docstring): ``head − removed + added``.
+
+        ``removed`` is either the files the operation read from ``base``
+        (checked by the conflict rule) or a rule ``head -> files``
+        evaluated on each attempt's head (overwrite, promotion).
+        ``summary`` is the operation's keys — a dict, or ``(head, seq) ->
+        dict`` when they depend on the commit — layered over the head's
+        carried keys; a None value drops a key.  ``branch`` builds on that
+        branch's head; ``descendant`` requires the head to be its ancestor
+        (the Iceberg cherry-pick rule).  A lost CAS race retries with
+        jittered backoff (doc iceberg-arch-geo-distributed-ha.md:287-311);
+        a conflict is raised at once."""
         import random
 
-        for attempt in range(max_retries):
-            snap = build()
+        added = tuple(added)
+        fixed = None if callable(removed) else {f.path for f in removed}
+        for attempt in range(self._COMMIT_ATTEMPTS):
+            snaps = self.snapshots()
+            ids = {s.snapshot_id: s for s in snaps}
+            if branch is not None:
+                head = ids[self._branch_pointer(branch)]
+            else:
+                head = next((s for s in reversed(snaps) if not s.staged), None)
+            files = head.manifest if head else ()
+            if operation == "create" and snaps:
+                raise CommitConflict(f"table already exists at {self.root}")
+            gone = fixed
+            if fixed is None:
+                gone = {f.path for f in removed(head)} if head else set()
+            elif fixed and (
+                not fixed <= {f.path for f in files}
+                or {f.path for f in files if f.content != "data"}
+                - {f.path for f in base.manifest}
+            ):
+                raise CommitConflict(
+                    f"{operation}: since seq {base.sequence_number} the head lost "
+                    "files this operation rewrites, or gained delete files"
+                )
+            if descendant is not None and head is not None:
+                s = descendant
+                while s is not None and s.snapshot_id != head.snapshot_id:
+                    s = ids.get(s.parent_id)
+                if s is None:
+                    raise CommitConflict(
+                        f"cannot {operation} {descendant.snapshot_id}: it does "
+                        f"not descend from the head {head.snapshot_id}, which is "
+                        "not an ancestor of it (a commit landed after it was "
+                        "built; redo it on the new head)"
+                    )
+            seq = (snaps[-1].sequence_number + 1) if snaps else 1
+            keys = summary(head, seq) if callable(summary) else (summary or {})
+            snap = self._make_snapshot(
+                operation,
+                tuple(f for f in files if f.path not in gone) + added,
+                schema_ddl or head.schema_ddl,
+                staged=staged,
+                summary={
+                    k: v for k, v in {**self._carry_summary(head), **keys}.items()
+                    if v is not None
+                },
+                seq=seq,
+                parent=head.snapshot_id if head else None,
+            )
             try:
                 return self._commit(snap)
             except CommitConflict:
-                if attempt == max_retries - 1:
+                if attempt == self._COMMIT_ATTEMPTS - 1:
                     raise
                 time.sleep(random.uniform(0.01, 0.05) * (attempt + 1))
         raise AssertionError("unreachable")
 
     # ---- write operations --------------------------------------------------
 
-    def _partition_summary(self, df: DataFrame, partition_by: list[str] | None) -> dict:
-        if not partition_by:
+    def _partition_summary(
+        self, schema, partition_by: list[str] | None, prior: "Snapshot | None"
+    ) -> dict:
+        """Summary keys of a partition spec (None = keep the current one).
+        Identity-column types merge over ``prior``'s: after spec evolution
+        the manifest still holds files written under older specs, and
+        reconstructing their stripped columns needs the old types forever."""
+        if partition_by is None:
             return {}
         identity, transforms = parse_partition_spec(partition_by)
-        types = {
-            f.name: f.dataType.simpleString()
-            for f in df.schema.fields
-            if f.name in identity
-        }
-        out = {
+        return {
             "partition_by": identity,
-            "partition_types": types,
+            "partition_types": {
+                **(prior.summary.get("partition_types", {}) if prior else {}),
+                **{f.name: f.dataType.simpleString()
+                   for f in schema.fields if f.name in identity},
+            },
             "partition_spec": list(partition_by),
+            "partition_transforms": transforms or None,
         }
-        if transforms:
-            out["partition_transforms"] = transforms
-        return out
 
     _CARRY_KEYS = (
         "partition_by", "partition_types", "partition_spec",
@@ -616,12 +702,17 @@ class HyTable:
         "table_schema", "renames",
     )
 
-    def _carry_summary(self, head: "Snapshot | None") -> dict:
-        """Metadata every commit must carry forward from its parent:
-        partition spec + evolved schema + rename history."""
-        if head is None:
-            return {}
-        return {k: head.summary[k] for k in self._CARRY_KEYS if k in head.summary}
+    def _carry_summary(self, snap: "Snapshot | None") -> dict:
+        """Table properties every commit carries forward from its head:
+        partition spec, write layout, evolved schema, rename history.  A
+        key ``snap`` lacks maps to None, so passing this as an operation's
+        keys installs exactly ``snap``'s properties."""
+        summary = snap.summary if snap else {}
+        return {k: summary.get(k) for k in self._CARRY_KEYS}
+
+    @staticmethod
+    def _spec_of(summary: dict) -> list[str]:
+        return list(summary.get("partition_spec") or summary.get("partition_by") or [])
 
     def partition_spec(self) -> tuple[list[str], dict[str, str]]:
         """The table's partition spec (identity columns and/or transform
@@ -629,23 +720,7 @@ class HyTable:
         cur = self.current_snapshot()
         if cur is None:
             return [], {}
-        spec = cur.summary.get("partition_spec", cur.summary.get("partition_by", []))
-        return list(spec), dict(cur.summary.get("partition_types", {}))
-
-    def _merged_partition_summary(
-        self, cur: "Snapshot | None", df: DataFrame, partition_by: list[str] | None
-    ) -> dict:
-        """Partition summary for a write, with identity-column types
-        merged over the parent's: after spec evolution the manifest still
-        holds files written under older specs, and reconstructing their
-        stripped columns needs the old types forever."""
-        ps = self._partition_summary(df, partition_by)
-        if cur is not None and "partition_types" in ps:
-            ps["partition_types"] = {
-                **dict(cur.summary.get("partition_types", {})),
-                **ps["partition_types"],
-            }
-        return ps
+        return self._spec_of(cur.summary), dict(cur.summary.get("partition_types", {}))
 
     def evolve_partition_spec(self, partition_by: list[str]) -> Snapshot:
         """≙ Iceberg partition spec evolution (ALTER TABLE … ADD/REPLACE
@@ -655,40 +730,18 @@ class HyTable:
         reading (column reconstruction) and pruning under the spec they
         were written with, while new appends lay data out under the new
         spec.  No data rewrite at any table size."""
-        identity, transforms = parse_partition_spec(partition_by)
-
-        def build():
-            cur = self.current_snapshot()
-            if cur is None:
-                raise NoSuchSnapshot("cannot evolve the spec of an empty table")
-            schema = self.spark.createDataFrame([], cur.schema_ddl).schema
-            known = {f.name: f.dataType.simpleString() for f in schema.fields}
-            missing = [c for c in identity if c not in known]
-            if missing:
-                raise ValueError(
-                    f"partition columns not in table schema: {missing}"
-                )
-            summary = {
-                **self._carry_summary(cur),
-                "partition_by": identity,
-                "partition_spec": list(partition_by),
-                "partition_types": {
-                    **dict(cur.summary.get("partition_types", {})),
-                    **{c: known[c] for c in identity},
-                },
-                "evolved_from": list(
-                    cur.summary.get("partition_spec", cur.summary.get("partition_by", []))
-                ),
-            }
-            if transforms:
-                summary["partition_transforms"] = transforms
-            else:
-                summary.pop("partition_transforms", None)
-            return self._make_snapshot(
-                "evolve_spec", cur.manifest, cur.schema_ddl, summary=summary
-            )
-
-        return self._retrying_commit(build)
+        cur = self.current_snapshot()
+        if cur is None:
+            raise NoSuchSnapshot("cannot evolve the spec of an empty table")
+        schema = self.spark.createDataFrame([], cur.schema_ddl).schema
+        identity, _ = parse_partition_spec(partition_by)
+        missing = [c for c in identity if c not in schema.fieldNames()]
+        if missing:
+            raise ValueError(f"partition columns not in table schema: {missing}")
+        return self._transact("evolve_spec", summary=lambda head, _seq: {
+            **self._partition_summary(schema, partition_by, head),
+            "evolved_from": self._spec_of(head.summary),
+        })
 
     def create(
         self,
@@ -707,83 +760,54 @@ class HyTable:
             raise FileExistsError(f"table already exists at {self.root}")
         if distribution not in ("none", "hash"):
             raise ValueError(f"unknown distribution mode: {distribution}")
-        files = self._write_data_files(
-            df, partition_by, distribute=(distribution == "hash"),
-            sort_by=list(sort_by or []),
+        summary = {
+            **self._partition_summary(df.schema, partition_by or None, None),
+            "write_distribution": None if distribution == "none" else distribution,
+            "write_sort_order": list(sort_by) if sort_by else None,
+        }
+        files = self._write_data_files(df, summary)
+        return self._transact(
+            "create", files, summary=summary, schema_ddl=df.schema.simpleString()
         )
-        summary = self._partition_summary(df, partition_by)
-        if distribution != "none":
-            summary["write_distribution"] = distribution
-        if sort_by:
-            summary["write_sort_order"] = list(sort_by)
-        snap = self._make_snapshot(
-            "create", tuple(files), df.schema.simpleString(), summary=summary,
-        )
-        return self._commit(snap)
 
     def append(self, df: DataFrame, staged: bool = False) -> Snapshot:
         """Append commit: parent manifest + new files (Iceberg fast-append)."""
-        partition_by, _ = self.partition_spec()
-        files = self._write_data_files(df, partition_by or None)
-
-        def build():
-            cur = self.current_snapshot()
-            manifest = (cur.manifest if cur else ()) + tuple(files)
-            summary = {**self._carry_summary(cur), "added_files": len(files)}
-            summary.update(self._merged_partition_summary(cur, df, partition_by))
-            return self._make_snapshot(
-                "append", manifest, df.schema.simpleString(), staged=staged,
-                summary=summary,
-            )
-
-        return self._retrying_commit(build)
+        base = self.current_snapshot()
+        files = self._write_data_files(df, base.summary if base else None)
+        return self._transact(
+            "append", files, summary={"added_files": len(files)},
+            schema_ddl=df.schema.simpleString(), staged=staged,
+        )
 
     def overwrite(
         self, df: DataFrame, staged: bool = False,
         partition_by: list[str] | None = None,
     ) -> Snapshot:
-        if partition_by is None:
-            partition_by = self.partition_spec()[0] or None
-        files = self._write_data_files(df, partition_by)
-
-        def build():
-            head = self.current_snapshot()
-            summary = {**self._carry_summary(head), "added_files": len(files)}
-            summary.update(self._merged_partition_summary(head, df, partition_by))
-            return self._make_snapshot(
-                "overwrite", tuple(files), df.schema.simpleString(), staged=staged,
-                summary=summary,
-            )
-
-        return self._retrying_commit(build)
+        base = self.current_snapshot()
+        spec = self._partition_summary(df.schema, partition_by, base)
+        files = self._write_data_files(df, {**(base.summary if base else {}), **spec})
+        return self._transact(
+            "overwrite", files, lambda head: head.manifest,
+            {**spec, "added_files": len(files)},
+            schema_ddl=df.schema.simpleString(), staged=staged,
+        )
 
     def overwrite_partitions(self, df: DataFrame) -> Snapshot:
         """Dynamic partition overwrite (≙ overwritePartitions): replace
         only the partitions present in ``df``; files of untouched
         partitions survive unchanged."""
-        partition_by, _ = self.partition_spec()
-        if not partition_by:
+        base = self.current_snapshot()
+        if base is None or not self._spec_of(base.summary):
             raise ValueError("table is not partitioned; use overwrite()")
-        new_files = self._write_data_files(df, partition_by)
+        new_files = self._write_data_files(df, base.summary)
         replaced = {f.partition for f in new_files}
-
-        def build():
-            cur = self.current_snapshot()
-            kept = tuple(
-                f for f in (cur.manifest if cur else ()) if f.partition not in replaced
-            )
-            summary = {
-                **self._carry_summary(cur),
-                "added_files": len(new_files),
-                "replaced_partitions": sorted(str(dict(p)) for p in replaced),
-            }
-            summary.update(self._merged_partition_summary(cur, df, partition_by))
-            return self._make_snapshot(
-                "overwrite_partitions", kept + tuple(new_files),
-                df.schema.simpleString(), summary=summary,
-            )
-
-        return self._retrying_commit(build)
+        return self._transact(
+            "overwrite_partitions", new_files,
+            lambda head: [f for f in head.manifest if f.partition in replaced],
+            {"added_files": len(new_files),
+             "replaced_partitions": sorted(str(dict(p)) for p in replaced)},
+            schema_ddl=df.schema.simpleString(),
+        )
 
     def stage_append(self, df: DataFrame) -> Snapshot:
         """Write-audit-publish step 1: commit an invisible snapshot
@@ -793,30 +817,18 @@ class HyTable:
 
     def publish(self, snapshot_id: str) -> Snapshot:
         """WAP step 2 (≙ setVisibility / cherrypick): re-commit the staged
-        manifest as a new visible head after verification."""
+        manifest as a new visible head after verification.  Refused unless
+        the head is an ancestor of the staged snapshot: re-committing the
+        staged manifest wholesale would drop a commit that landed after
+        the stage (lost update)."""
         staged = self.snapshot_by_id(snapshot_id)
         if not staged.staged:
             raise ValueError(f"{snapshot_id} is not staged")
-
-        def build():
-            # Cherry-pick safety: publish re-commits the STAGED manifest
-            # wholesale, so a commit that landed after the stage would be
-            # silently dropped (lost update).  Refuse unless the current
-            # head is an ancestor of the staged snapshot — the Iceberg
-            # cherry-pick conflict rule.
-            head = self.current_snapshot()
-            if head is not None and not self._is_ancestor(head.snapshot_id, staged):
-                raise CommitConflict(
-                    f"cannot publish {snapshot_id}: head {head.snapshot_id} "
-                    "is not an ancestor of the staged snapshot (a commit "
-                    "landed after staging; re-stage on the new head)"
-                )
-            return self._make_snapshot(
-                "publish", staged.manifest, staged.schema_ddl,
-                summary={**self._carry_summary(staged), "published_from": snapshot_id},
-            )
-
-        return self._retrying_commit(build)
+        return self._transact(
+            "publish", staged.manifest, lambda head: head.manifest,
+            {**self._carry_summary(staged), "published_from": snapshot_id},
+            schema_ddl=staged.schema_ddl, descendant=staged,
+        )
 
     def rewrite_data_files(
         self,
@@ -827,7 +839,8 @@ class HyTable:
     ) -> Snapshot:
         """Compaction (≙ rewrite_data_files; doc :1111-1115): rewrite the
         current snapshot's data into ~target-sized files, commit as
-        'replace' (same rows, new layout).
+        'replace' (same rows, new layout).  Files appended meanwhile
+        survive the commit; a delete committed meanwhile is a conflict.
 
         ``sort_by`` range-clusters on the given columns (each output file
         owns a contiguous key range → tight min/max footer stats → manifest
@@ -847,7 +860,7 @@ class HyTable:
         total = sum(f.size_bytes for f in cur.manifest)
         if n_files is None:
             n_files = max(1, round(total / target_file_size_bytes))
-        df = self.read()
+        df = self._read_live_rows(cur, self.data_files(cur))
         layout: dict = {}
         if sort_by:
             df = df.repartitionByRange(n_files, *sort_by).sortWithinPartitions(*sort_by)
@@ -866,19 +879,14 @@ class HyTable:
         # compaction preserves the table's partition layout (hive dirs /
         # hidden transforms) — pruning by partition value must survive a
         # rewrite, exactly as Iceberg's rewrite respects the current spec.
-        # distribute=False: the compaction's own layout (coalesce / range /
-        # z-order) governs row placement here.
-        spec, _ = self.partition_spec()
-        files = self._write_data_files(df, spec or None, distribute=False)
-
-        def build():
-            return self._make_snapshot(
-                "replace", tuple(files), cur.schema_ddl,
-                summary={**self._carry_summary(cur), **layout,
-                         "compacted_from": len(cur.manifest), "to": len(files)},
-            )
-
-        return self._retrying_commit(build)
+        # No hash distribution: the compaction's own layout (coalesce /
+        # range / z-order) governs row placement here.
+        files = self._write_data_files(df, {**cur.summary, "write_distribution": None})
+        return self._transact(
+            "replace", files, cur.manifest,
+            {**layout, "compacted_from": len(cur.manifest), "to": len(files)},
+            base=cur,
+        )
 
     def _zvalue_column(self, df: DataFrame, cols: list[str]):
         """Morton (Z-order) value: scale each column to 16 bits against its
@@ -924,9 +932,6 @@ class HyTable:
         return z
 
     # ---- read operations + pruning -----------------------------------------
-
-    def _paths(self, snap: Snapshot) -> list[str]:
-        return [os.path.join(self.root, f.path) for f in snap.manifest]
 
     @staticmethod
     def _transform_excludes(tr: dict, raw: str, op: str, val: object) -> bool:
@@ -1322,94 +1327,74 @@ class HyTable:
         )
         return set(table.column("file_path").to_pylist())
 
-    def _prune_dead_deletes(
-        self, files: tuple[DataFileRef, ...]
-    ) -> tuple[DataFileRef, ...]:
-        """Drop delete-file refs that can no longer hide any data file in
+    def _dead_deletes(self, files: tuple[DataFileRef, ...]) -> list[DataFileRef]:
+        """Delete-file refs that can no longer hide any data file in
         ``files``: an equality delete applies only to data files added
         STRICTLY before it, a position delete only to the file paths it
-        names.  Called after a COW rewrite replaced data files (the
-        rewrite materialized those deletes).  Not-yet-stamped new files
-        (``added_seq == 0``) are the rewrite's output — newer than every
-        delete, so they never keep one alive."""
+        names.  Not-yet-stamped new files (``added_seq == 0``) are a
+        rewrite's output — newer than every delete, so they never keep one
+        alive."""
         data = [f for f in files if f.content == "data"]
         min_seq = min((f.added_seq for f in data if f.added_seq), default=None)
         data_paths = {f.path for f in data}
-        kept = []
-        for f in files:
-            if f.content == "equality_delete":
-                if min_seq is not None and min_seq < f.added_seq:
-                    kept.append(f)
-            elif f.content == "position_delete":
-                if data_paths & self._position_delete_targets(f):
-                    kept.append(f)
-            else:
-                kept.append(f)
-        return tuple(kept)
+        return [
+            f for f in files
+            if (f.content == "equality_delete"
+                and (min_seq is None or min_seq >= f.added_seq))
+            or (f.content == "position_delete"
+                and not data_paths & self._position_delete_targets(f))
+        ]
+
+    def _head_and_affected(
+        self, preds: list[tuple[str, str, object]]
+    ) -> tuple[Snapshot, list[DataFileRef]]:
+        cur = self.current_snapshot()
+        if cur is None:
+            raise NoSuchSnapshot("table is empty")
+        return cur, self.prune_files(preds, cur)
+
+    def _rewrite_cow(
+        self, operation: str, base: Snapshot, affected: list[DataFileRef],
+        rows: DataFrame | None,
+    ) -> Snapshot:
+        """Copy-on-write core of DELETE/UPDATE/MERGE: ``rows`` (None = no
+        rows left) replace the ``affected`` data files of ``base``, laid
+        out by its spec; delete files the rewrite materialized go too."""
+        new_files = self._write_data_files(rows, base.summary) if rows is not None else []
+        gone = {f.path for f in affected}
+        survivors = tuple(f for f in base.manifest if f.path not in gone)
+        return self._transact(
+            operation, new_files,
+            list(affected) + self._dead_deletes(survivors + tuple(new_files)),
+            {"rewritten_files": len(affected), "new_files": len(new_files)},
+            base=base,
+        )
 
     def delete_where(self, preds: list[tuple[str, str, object]]) -> Snapshot:
         """Row-level DELETE as file-granular copy-on-write: only files
         whose stats/partition overlap the predicate are rewritten; all
         others carry over untouched (≙ Iceberg COW DELETE)."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise NoSuchSnapshot("table is empty")
-        affected = self.prune_files(preds, cur)
+        cur, affected = self._head_and_affected(preds)
         if not affected:
             return cur
-        keep_rows = self._read_live_rows(cur, affected).filter(
-            ~self._preds_to_column(preds)
+        keep = self._read_live_rows(cur, affected).filter(~self._preds_to_column(preds))
+        return self._rewrite_cow(
+            "delete", cur, affected, keep if keep.limit(1).count() else None
         )
-        partition_by = list(cur.summary.get("partition_by", [])) or None
-        new_files = (
-            self._write_data_files(keep_rows, partition_by)
-            if keep_rows.limit(1).count()
-            else []
-        )
-        affected_set = {f.path for f in affected}
-
-        def build():
-            head = self.current_snapshot()
-            untouched = tuple(f for f in head.manifest if f.path not in affected_set)
-            manifest = self._prune_dead_deletes(untouched + tuple(new_files))
-            return self._make_snapshot(
-                "delete", manifest, head.schema_ddl,
-                summary={**self._carry_summary(head),
-                         "rewritten_files": len(affected), "new_files": len(new_files)},
-            )
-
-        return self._retrying_commit(build)
 
     def update_where(
         self, preds: list[tuple[str, str, object]], assignments: dict[str, str]
     ) -> Snapshot:
         """Row-level UPDATE (COW): rewrite affected files applying
         ``assignments`` (column → SQL expression) to matching rows."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise NoSuchSnapshot("table is empty")
-        affected = self.prune_files(preds, cur)
+        cur, affected = self._head_and_affected(preds)
         if not affected:
             return cur
         match = self._preds_to_column(preds)
         df = self._read_live_rows(cur, affected)
         for col, expr in assignments.items():
             df = df.withColumn(col, F.when(match, F.expr(expr)).otherwise(F.col(col)))
-        partition_by = list(cur.summary.get("partition_by", [])) or None
-        new_files = self._write_data_files(df, partition_by)
-        affected_set = {f.path for f in affected}
-
-        def build():
-            head = self.current_snapshot()
-            untouched = tuple(f for f in head.manifest if f.path not in affected_set)
-            manifest = self._prune_dead_deletes(untouched + tuple(new_files))
-            return self._make_snapshot(
-                "update", manifest, head.schema_ddl,
-                summary={**self._carry_summary(head),
-                         "rewritten_files": len(affected), "new_files": len(new_files)},
-            )
-
-        return self._retrying_commit(build)
+        return self._rewrite_cow("update", cur, affected, df)
 
     def merge(self, source: DataFrame, key_cols: list[str]) -> Snapshot:
         """MERGE/upsert (COW): source rows replace matching target rows,
@@ -1433,25 +1418,10 @@ class HyTable:
         # files — never the whole manifest, which would scan delete files
         # as table rows.
         affected = self.prune_files(preds, cur) if preds else self.data_files(cur)
-        target_rows = self._read_live_rows(cur, affected)
-        merged = target_rows.join(
+        merged = self._read_live_rows(cur, affected).join(
             source.select(key_cols).distinct(), key_cols, "left_anti"
         ).unionByName(source)
-        partition_by = list(cur.summary.get("partition_by", [])) or None
-        new_files = self._write_data_files(merged, partition_by)
-        affected_set = {f.path for f in affected}
-
-        def build():
-            head = self.current_snapshot()
-            untouched = tuple(f for f in head.manifest if f.path not in affected_set)
-            manifest = self._prune_dead_deletes(untouched + tuple(new_files))
-            return self._make_snapshot(
-                "merge", manifest, head.schema_ddl,
-                summary={**self._carry_summary(head),
-                         "rewritten_files": len(affected), "new_files": len(new_files)},
-            )
-
-        return self._retrying_commit(build)
+        return self._rewrite_cow("merge", cur, affected, merged)
 
     def incremental_read(self, from_seq: int, to_seq: int) -> DataFrame:
         """Rows in files added in (from_seq, to_seq] — the fast-forward
@@ -1677,62 +1647,49 @@ class HyTable:
                 out.append((col, snap.summary.get("partition_types", {}).get(col, "string")))
         return out
 
-    def _schema_change(self, mutate, op_detail: str) -> Snapshot:
-        cur = self.current_snapshot()
-        if cur is None:
-            raise NoSuchSnapshot("table is empty")
-        schema = self.table_schema(cur)
-        renames = [tuple(r) for r in cur.summary.get("renames", [])]
-
-        def build():
-            head = self.current_snapshot()
-            new_schema, new_renames = mutate(
-                list(schema), list(renames), head.sequence_number + 1
-            )
-            summary = {
-                **head.summary,
+    def _schema_change(
+        self, new_schema: list[tuple[str, str]], op_detail: str,
+        rename: tuple[str, str] | None = None,
+    ) -> Snapshot:
+        def keys(head: Snapshot, seq: int) -> dict:
+            # a rename takes effect at this commit's own sequence number
+            renames = [list(r) for r in head.summary.get("renames", [])]
+            return {
                 "table_schema": [[c, t] for c, t in new_schema],
-                "renames": [list(r) for r in new_renames],
+                "renames": renames + ([[seq, *rename]] if rename else []),
                 "change": op_detail,
             }
-            return self._make_snapshot(
-                "schema_change", head.manifest,
-                "struct<" + ",".join(f"{c}:{t}" for c, t in new_schema) + ">",
-                summary=summary,
-            )
 
-        return self._retrying_commit(build)
+        return self._transact(
+            "schema_change", summary=keys,
+            schema_ddl="struct<" + ",".join(f"{c}:{t}" for c, t in new_schema) + ">",
+        )
 
     def add_column(self, name: str, ddl_type: str) -> Snapshot:
-        def mutate(schema, renames, _seq):
-            if any(c == name for c, _ in schema):
-                raise ValueError(f"column {name!r} already exists")
-            schema.append((name, ddl_type))
-            return schema, renames
-
-        return self._schema_change(mutate, f"add:{name}")
+        schema = self.table_schema()
+        if any(c == name for c, _ in schema):
+            raise ValueError(f"column {name!r} already exists")
+        return self._schema_change(schema + [(name, ddl_type)], f"add:{name}")
 
     def drop_column(self, name: str) -> Snapshot:
-        def mutate(schema, renames, _seq):
-            if not any(c == name for c, _ in schema):
-                raise ValueError(f"no column {name!r}")
-            return [(c, t) for c, t in schema if c != name], renames
-
-        return self._schema_change(mutate, f"drop:{name}")
+        schema = self.table_schema()
+        if not any(c == name for c, _ in schema):
+            raise ValueError(f"no column {name!r}")
+        return self._schema_change(
+            [(c, t) for c, t in schema if c != name], f"drop:{name}"
+        )
 
     def rename_column(self, old: str, new: str) -> Snapshot:
         partition_by, _ = self.partition_spec()
         if old in partition_by:
             raise ValueError("renaming partition columns is not supported")
-
-        def mutate(schema, renames, seq):
-            if not any(c == old for c, _ in schema):
-                raise ValueError(f"no column {old!r}")
-            schema = [(new if c == old else c, t) for c, t in schema]
-            renames.append((seq, old, new))
-            return schema, renames
-
-        return self._schema_change(mutate, f"rename:{old}->{new}")
+        schema = self.table_schema()
+        if not any(c == old for c, _ in schema):
+            raise ValueError(f"no column {old!r}")
+        return self._schema_change(
+            [(new if c == old else c, t) for c, t in schema],
+            f"rename:{old}->{new}", rename=(old, new),
+        )
 
     def _adapt_to_schema(self, df: DataFrame, snap: Snapshot, added_seq: int) -> DataFrame:
         """Adapt a file-epoch DataFrame to the snapshot's target schema:
@@ -1767,6 +1724,17 @@ class HyTable:
             refs[0], content=content, delete_cols=delete_cols, added_seq=0
         )
 
+    def _mor_delete(
+        self, base: Snapshot, rows: DataFrame, content: str,
+        delete_cols: tuple[str, ...] = (),
+    ) -> Snapshot:
+        """Merge-on-read core of both delete paths: commit ``rows`` as one
+        delete file on top of the head; no matching row ⇒ no commit."""
+        ref = self._write_delete_file(rows, content, delete_cols)
+        if ref is None or ref.row_count == 0:
+            return base
+        return self._transact("delete_mor", (ref,), summary={"delete_rows": ref.row_count})
+
     def delete_where_mor(
         self, preds: list[tuple[str, str, object]], delete_cols: list[str]
     ) -> Snapshot:
@@ -1775,48 +1743,25 @@ class HyTable:
         compaction materializes the delete.  O(matching keys) write
         instead of rewriting data files — the streaming-upsert-friendly
         path (≙ FileRef.ContentType EQUALITY_DELETE)."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise NoSuchSnapshot("table is empty")
-        matching = self.read(preds=preds).select(delete_cols).distinct().coalesce(1)
-        ref = self._write_delete_file(matching, "equality_delete", tuple(delete_cols))
-        if ref is None or ref.row_count == 0:
-            return cur
-
-        def build():
-            head = self.current_snapshot()
-            return self._make_snapshot(
-                "delete_mor", head.manifest + (ref,), head.schema_ddl,
-                summary={**head.summary, "delete_rows": ref.row_count},
-            )
-
-        return self._retrying_commit(build)
+        cur, affected = self._head_and_affected(preds)
+        matching = (
+            self._read_live_rows(cur, affected)
+            .filter(self._preds_to_column(preds))
+            .select(delete_cols).distinct().coalesce(1)
+        )
+        return self._mor_delete(cur, matching, "equality_delete", tuple(delete_cols))
 
     def delete_positions_mor(self, preds: list[tuple[str, str, object]]) -> Snapshot:
         """Merge-on-read DELETE via a POSITION delete file: (file, row
         position) pairs of matching rows (≙ POSITION_DELETE)."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise NoSuchSnapshot("table is empty")
-        affected = self.prune_files(preds, cur)
+        cur, affected = self._head_and_affected(preds)
         rows = (
             self._read_refs(cur, affected, with_meta=True)
             .filter(self._preds_to_column(preds))
             .selectExpr("__file AS file_path", "__pos AS pos")
             .coalesce(1)
         )
-        ref = self._write_delete_file(rows, "position_delete", ())
-        if ref is None or ref.row_count == 0:
-            return cur
-
-        def build():
-            head = self.current_snapshot()
-            return self._make_snapshot(
-                "delete_mor", head.manifest + (ref,), head.schema_ddl,
-                summary={**head.summary, "delete_rows": ref.row_count},
-            )
-
-        return self._retrying_commit(build)
+        return self._mor_delete(cur, rows, "position_delete")
 
     def upsert_mor(self, source: DataFrame, key_cols: list[str]) -> Snapshot:
         """Streaming-friendly MOR upsert (the Flink-CDC / equality-delete
@@ -1829,23 +1774,15 @@ class HyTable:
         cur = self.current_snapshot()
         if cur is None:
             return self.create(source)
-        partition_by, _ = self.partition_spec()
-        data_files = self._write_data_files(source, partition_by or None)
+        data_files = self._write_data_files(source, cur.summary)
         keys = source.select(key_cols).distinct().coalesce(1)
         del_ref = self._write_delete_file(keys, "equality_delete", tuple(key_cols))
-
-        def build():
-            head = self.current_snapshot()
-            return self._make_snapshot(
-                "upsert_mor",
-                head.manifest + tuple(data_files) + ((del_ref,) if del_ref else ()),
-                source.schema.simpleString(),
-                summary={**self._carry_summary(head),
-                         "added_files": len(data_files),
-                         "delete_rows": del_ref.row_count if del_ref else 0},
-            )
-
-        return self._retrying_commit(build)
+        return self._transact(
+            "upsert_mor", data_files + ([del_ref] if del_ref else []),
+            summary={"added_files": len(data_files),
+                     "delete_rows": del_ref.row_count if del_ref else 0},
+            schema_ddl=source.schema.simpleString(),
+        )
 
     # ---- branches (≙ promote_to_regional_branch, doc :287-311) -------------
 
@@ -1886,29 +1823,26 @@ class HyTable:
         self._advance_branch(name, head.snapshot_id)
         return head
 
-    def branch_head(self, name: str) -> Snapshot:
+    def _branch_pointer(self, name: str) -> str:
+        """Snapshot id the branch points at."""
         versions = self._branch_versions(name)
         if not versions:
             raise NoSuchSnapshot(f"branch {name!r}")
         with open(os.path.join(self._branch_dir(name), versions[-1])) as fh:
-            return self.snapshot_by_id(json.load(fh)["snapshot_id"])
+            return json.load(fh)["snapshot_id"]
+
+    def branch_head(self, name: str) -> Snapshot:
+        return self.snapshot_by_id(self._branch_pointer(name))
 
     def append_to_branch(self, name: str, df: DataFrame) -> Snapshot:
         """Append on a branch: the commit is staged (invisible to main
         reads) and the branch pointer advances — the regional-branch write
         of the geo design (writers never touch main directly)."""
-        head = self.branch_head(name)
-        spec = head.summary.get("partition_spec", head.summary.get("partition_by", []))
-        files = self._write_data_files(df, list(spec) or None)
-
-        def build():
-            return self._make_snapshot(
-                "branch_append", head.manifest + tuple(files), df.schema.simpleString(),
-                staged=True, parent=head.snapshot_id,
-                summary={**head.summary, "branch": name},
-            )
-
-        snap = self._retrying_commit(build)
+        files = self._write_data_files(df, self.branch_head(name).summary)
+        snap = self._transact(
+            "branch_append", files, summary={"branch": name},
+            schema_ddl=df.schema.simpleString(), staged=True, branch=name,
+        )
         self._advance_branch(name, snap.snapshot_id)
         return snap
 
@@ -1919,35 +1853,16 @@ class HyTable:
         head = self.branch_head(name)
         return self._read_live_rows(head, self.data_files(head))
 
-    def _is_ancestor(self, ancestor_id: str | None, snap: Snapshot) -> bool:
-        seen: Snapshot | None = snap
-        ids = {s.snapshot_id: s for s in self.snapshots()}
-        while seen is not None:
-            if seen.snapshot_id == ancestor_id:
-                return True
-            seen = ids.get(seen.parent_id) if seen.parent_id else None
-        return ancestor_id is None
-
     def fast_forward(self, name: str) -> Snapshot:
         """Fast-forward main to the branch head — the CAS promote with
         ancestry check (expected_hash semantics): refuses if main moved
         past the branch point (diverged)."""
         bh = self.branch_head(name)
-        main = self.current_snapshot()
-        main_id = main.snapshot_id if main else None
-        if not self._is_ancestor(main_id, bh):
-            raise CommitConflict(
-                f"branch {name!r} does not descend from main head; cannot fast-forward"
-            )
-
-        def build():
-            return self._make_snapshot(
-                "fast_forward", bh.manifest, bh.schema_ddl,
-                summary={**{k: v for k, v in bh.summary.items() if k != "branch"},
-                         "fast_forwarded_from": name},
-            )
-
-        return self._retrying_commit(build)
+        return self._transact(
+            "fast_forward", bh.manifest, lambda head: head.manifest,
+            {**self._carry_summary(bh), "fast_forwarded_from": name},
+            schema_ddl=bh.schema_ddl, descendant=bh,
+        )
 
     # ---- tags + refs metadata table (≙ Iceberg refs: BRANCH/TAG) -----------
 

@@ -551,6 +551,32 @@ def test_write_sort_order_persists_and_tightens_stats(spark, tmp_path):
     assert len(pruned) == 1
     assert t.read(preds=[("id", "<", 50)]).count() == 50
 
+    # one carry rule: table properties ride every commit, replicas
+    # included; an operation's own keys appear only on its snapshot
+    from iceberg_hybrid_spark.lake import replication as R
+
+    t.delete_where_mor([("id", "=", 7)], ["id"])
+    t.publish(t.stage_append(spark.range(200, 210).toDF("id")).snapshot_id)
+    t.create_branch("b")
+    t.append_to_branch("b", spark.range(210, 220).toDF("id"))
+    t.fast_forward("b")
+    dst = HyTable(spark, str(tmp_path / "replica"))
+    R.replicate(spark, t, dst)
+    for s in t.snapshots() + dst.snapshots():
+        carried = {k: s.summary[k] for k in HyTable._CARRY_KEYS if k in s.summary}
+        assert carried == {"write_sort_order": ["id"]}
+
+    def own_keys(table):
+        return [sorted(set(s.summary) - set(HyTable._CARRY_KEYS))
+                for s in table.snapshots()]
+
+    assert own_keys(t) == [
+        [], ["added_files"], ["delete_rows"], ["added_files"],
+        ["published_from"], ["branch"], ["fast_forwarded_from"],
+    ]
+    assert own_keys(dst) == [["replicated_from", "source_seq"], ["published_from"]]
+    assert dst.read().count() == 219
+
 
 def test_changelog_fast_path_and_general_path(spark, tmp_path):
     """Row-level CDC: pure appends take the map-only added-files path
@@ -636,3 +662,74 @@ def test_in_and_not_equal_pruning(spark, tmp_path):
     assert t.read(preds=[("id", "!=", 500)]).count() == 200
     # != on a non-constant file keeps it
     assert t.read(preds=[("id", "!=", 5)]).count() == 200
+
+
+def _race_first_write(monkeypatch, racer):
+    """Run ``racer`` once, right after the first data-file write — i.e.
+    after the operation read its base but before it commits."""
+    write = HyTable._write_data_files
+    fired = []
+
+    def racing_write(self, *args, **kwargs):
+        refs = write(self, *args, **kwargs)
+        if not fired:
+            fired.append(True)
+            racer()
+        return refs
+
+    monkeypatch.setattr(HyTable, "_write_data_files", racing_write)
+
+
+def test_compaction_keeps_append_committed_mid_rewrite(spark, tmp_table_root, monkeypatch):
+    """Lost update: compaction must rebase onto the head, keeping an
+    append that committed while it rewrote files."""
+    t = HyTable(spark, tmp_table_root)
+    t.create(make_df(spark, 0, 10))
+    for lo in (10, 20, 30):
+        t.append(make_df(spark, lo, lo + 10))
+    _race_first_write(
+        monkeypatch,
+        lambda: HyTable(spark, tmp_table_root).append(make_df(spark, 100, 105)),
+    )
+    t.rewrite_data_files(n_files=1)
+    monkeypatch.undo()
+    assert t.read().count() == 45
+    assert t.read(preds=[("id", ">=", 100)]).count() == 5
+
+
+def test_cow_delete_conflicts_with_mor_delete_committed_mid_rewrite(
+    spark, tmp_table_root, monkeypatch
+):
+    """A COW rewrite whose head gained a delete file since its base must
+    fail, not commit rewritten files that resurrect the deleted rows."""
+    t = HyTable(spark, tmp_table_root)
+    t.create(make_df(spark, 0, 100).coalesce(1))
+    _race_first_write(
+        monkeypatch,
+        lambda: HyTable(spark, tmp_table_root).delete_where_mor([("id", "=", 50)], ["id"]),
+    )
+    with pytest.raises(CommitConflict):
+        t.delete_where([("id", "<", 10)])
+    monkeypatch.undo()
+    assert t.read().count() == 99
+    assert t.read(preds=[("id", "=", 50)]).count() == 0
+
+
+def test_parent_is_the_visible_head_the_manifest_was_built_on(spark, tmp_table_root):
+    """A staged or branch commit is not on main's lineage: the next main
+    commit's parent is the visible head its manifest extends."""
+    t = HyTable(spark, tmp_table_root)
+    s1 = t.create(make_df(spark, 0, 10))
+    staged = t.stage_append(make_df(spark, 10, 20))
+    assert staged.parent_id == s1.snapshot_id
+    s3 = t.append(make_df(spark, 20, 30))
+    assert s3.parent_id == s1.snapshot_id
+    t.create_branch("b")
+    b1 = t.append_to_branch("b", make_df(spark, 30, 40))
+    assert b1.parent_id == s3.snapshot_id
+    s5 = t.append(make_df(spark, 40, 50))
+    assert s5.parent_id == s3.snapshot_id
+    lineage = {r.sequence_number: r.parent_id for r in t.history().collect()}
+    assert lineage[s3.sequence_number] == s1.snapshot_id
+    assert lineage[s5.sequence_number] == s3.snapshot_id
+    assert t.read().count() == 30

@@ -135,3 +135,21 @@ def test_partitioned_append_inherits_spec(spark, tmp_path):
     t.append(spark.createDataFrame([(100, 7)], "id long, part long"))
     assert t.read(preds=[("part", "=", 7)]).count() == 1
     assert t.read().count() == 31
+
+
+def test_cow_rewrite_keeps_hidden_partitioning(spark, tmp_path):
+    """COW rewrites lay files out under the full partition spec,
+    transforms included, so a later dynamic overwrite replaces them."""
+    t = HyTable(spark, str(tmp_path / "tr"))
+    t.create(
+        # one file per partition: both overlap id = 3, so both rewrite
+        spark.range(0, 12).selectExpr("id", "id % 4 AS k").coalesce(1),
+        partition_by=["truncate(2, k)"],
+    )
+    t.delete_where([("id", "=", 3)])
+    assert all(f.partition for f in t.current_snapshot().manifest)
+    t.overwrite_partitions(
+        spark.createDataFrame([(100, 0), (101, 1)], "id long, k long")
+    )
+    assert sorted(r.id for r in t.read().filter("k < 2").collect()) == [100, 101]
+    assert sorted(r.id for r in t.read().filter("k >= 2").collect()) == [2, 6, 7, 10, 11]
